@@ -119,6 +119,10 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").split("sf")[-1])
     except ValueError:  # dir name without an sf<N> suffix
         sf = 0.0
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:  # unset or malformed: report the host's count
+        cpus = os.cpu_count() or 8
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     # Queries whose r05 spread was ~25-70% of their median (cache/JIT
     # sensitive iterative or sessionization shapes) get extra passes so the
@@ -263,9 +267,7 @@ def main() -> None:
                 # flat — echoing the master the session REALLY ran with
                 # lets a reader distinguish "env var ignored" from
                 # "insensitive at this scale factor"
-                "cpus": int(
-                    os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-                ),
+                "cpus": cpus,
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "master": spark.sparkContext.master,
                 "calibration_sec": calibration,

@@ -134,22 +134,14 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, with_size: bool = False) -> DataFrame:
-    """One row per doc with N_HASHES minhash columns mh0..mh7.
-
-    ``with_size`` adds the doc's shingle count as ``n`` — the Jaccard
-    verify stage's size table riding the SAME aggregation (round 13): a
-    separate ``sh.groupBy(doc_id).count()`` is one more full pass over
-    the shingle stream plus its own exchange, for counts this group-by
-    already sees."""
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """One row per doc with N_HASHES minhash columns mh0..mh7."""
     aggs = [
         F.min(
             (F.lit(MINHASH_AS[i]) * F.col("h") + F.lit(MINHASH_BS[i])) % F.lit(MINHASH_P)
         ).alias(f"mh{i}")
         for i in range(N_HASHES)
     ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("n"))
     return sh.groupBy("doc_id").agg(*aggs)
 
 
@@ -191,9 +183,7 @@ def sql_jaccard_verify(threshold: float) -> str:
     """
 
 
-def jaccard_verify(
-    cand: DataFrame, sh: DataFrame, threshold: float, sizes: DataFrame | None = None
-) -> DataFrame:
+def jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard over candidate pairs: |A∩B| / (|A|+|B|-|A∩B|) ≥ θ.
 
     Touches candidate pairs only — the verify stage shared by the LSH and
@@ -204,15 +194,8 @@ def jaccard_verify(
     join BEFORE the shingle-intersection join (the expensive stage, whose
     input is pairs × shingles). Exact pruning: the final result set is
     unchanged, only the candidate stream shrinks.
-
-    ``sizes`` (doc_id, n) lets a caller that already aggregated per-doc
-    shingle counts (minhash_signatures with_size=True) pass them in,
-    skipping this function's own full pass over ``sh``; identical by
-    construction — both count the rows of the same distinct-shingle
-    frame.
     """
-    if sizes is None:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     ratio_ok = F.least("na", "nb").cast("double") >= threshold * F.greatest(
@@ -369,13 +352,8 @@ def l2_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
-    sigs = minhash_signatures(sh, with_size=True)
-
-    cand = lsh_candidates(sigs)
-
-    return jaccard_verify(
-        cand, sh, JACCARD_THRESHOLD, sizes=sigs.select("doc_id", "n")
-    )
+    cand = lsh_candidates(minhash_signatures(sh))
+    return jaccard_verify(cand, sh, JACCARD_THRESHOLD)
 
 
 # --- L2: near-dup clusters (connected components) ----------------------------
@@ -418,22 +396,36 @@ def l2_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each round is a neighbor-min join plus a pointer jump (label ←
     label[label]), so rounds are O(log diameter) — the same guarantee as
     public large-star/small-star contraction — and near-dup components
-    are tiny anyway (dup clusters, not a social graph): 2-3 rounds in
-    practice, ~10 even for a 1000-link chain. ``localCheckpoint``
-    truncates the growing plan per round. The oracle replays it as a
-    recursive reachability CTE.
+    are tiny anyway (dup clusters, not a social graph): the sf0.1 pair
+    graph (250 pairs, 465 vertices) converges in 1 round, a 1000-link
+    chain in ~10. ``localCheckpoint`` truncates the growing plan per
+    round. The oracle replays it as a recursive reachability CTE.
     """
-    pairs = l2_minhash_lsh_pairs(spark, sf_dir)
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .localCheckpoint(eager=True)  # pair pipeline runs once, not per round
+    # eager checkpoint: the pair pipeline runs once here, not per round
+    edges = pair_edges(l2_minhash_lsh_pairs(spark, sf_dir)).localCheckpoint(
+        eager=True
     )
     labels = min_label_propagation(spark, edges)
     return labels.select(
         F.col("u").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("u") == F.col("label")).alias("keep"),
+    )
+
+
+def pair_edges(pairs: DataFrame) -> DataFrame:
+    """Symmetric ``(u, v)`` edge table of ``(doc_a, doc_b)`` pairs: both
+    directions come out of ONE Generate over one evaluation of ``pairs``.
+    A union of two selects would run the lazy pair plan once per branch:
+    the final adaptive plan reuses none of its cache scans, aggregates or
+    broadcasts."""
+    return pairs.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
+                F.struct(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")),
+            )
+        )
     )
 
 
@@ -1347,8 +1339,7 @@ def l40_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     sh = _scoped_cache(shingles(docs), (id(spark), sf_dir))
-    sigs = minhash_signatures(sh, with_size=True)
-    bands = lsh_bands(sigs)
+    bands = lsh_bands(minhash_signatures(sh))
     new_b = bands.filter(F.col("doc_id") % 3 == 0).alias("n")
     idx_b = bands.filter(F.col("doc_id") % 3 != 0).alias("i")
     cand = (
@@ -1359,9 +1350,7 @@ def l40_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("n.doc_id").alias("doc_a"), F.col("i.doc_id").alias("doc_b"))
         .distinct()
     )
-    return jaccard_verify(
-        cand, sh, JACCARD_THRESHOLD, sizes=sigs.select("doc_id", "n")
-    ).select(
+    return jaccard_verify(cand, sh, JACCARD_THRESHOLD).select(
         F.col("doc_a").alias("doc_new"), F.col("doc_b").alias("dup_of"), "jaccard"
     )
 

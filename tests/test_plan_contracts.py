@@ -13,6 +13,8 @@ only starting FROM this plan).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from datums_warehouse_spark import all_queries
@@ -154,6 +156,23 @@ def test_minhash_lsh_never_all_pairs(spark, sf_dir):
     plan = plan_of("l2_minhash_lsh_pairs", spark, sf_dir)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_pair_edges_run_the_pair_pipeline_once(spark, sf_dir):
+    """l2_dedup_clusters' symmetric edge table must evaluate the LSH pair
+    plan ONCE: a union of two selects over the lazy pair plan runs the
+    minhash aggregate and every shingle-cache scan once per branch (the
+    final adaptive plan reuses none of their exchanges)."""
+    from datums_warehouse_spark.llm.dedup import pair_edges
+
+    pairs = QUERIES["l2_minhash_lsh_pairs"].fn(spark, sf_dir)
+    one, both = formatted_plan(pairs), formatted_plan(pair_edges(pairs))
+    minhash_agg = r"^Functions \[\d+\]: \[partial_min\("
+    shingle_scan = r"^\(\d+\) InMemoryTableScan\b"
+    for pattern in (minhash_agg, shingle_scan):
+        n_one = len(re.findall(pattern, one, re.M))
+        assert n_one > 0, pattern
+        assert len(re.findall(pattern, both, re.M)) <= n_one, pattern
 
 
 def test_ivf_ann_candidates_equi_join(spark, sf_dir):

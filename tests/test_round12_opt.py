@@ -15,7 +15,7 @@ import re
 from pyspark.sql import functions as F
 
 from datums_warehouse_spark import all_queries
-from datums_warehouse_spark.sources.tables import load, spread
+from datums_warehouse_spark.sources.tables import load, spread, starved
 from datums_warehouse_spark.testing.plans import formatted_plan
 
 
@@ -33,6 +33,19 @@ def test_spread_widens_a_starved_scan(spark, sf_dir):
         out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
     )
     assert "RepartitionByExpression" in out._jdf.queryExecution().logical().toString()
+
+
+def test_no_spread_switch_reaches_both_gates(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_NO_SPREAD must read every scan as well split, so the
+    A/B switch turns off the repartition AND the scale-gated j3 path —
+    not the repartition alone while j3 keeps its broadcast-pinned plan."""
+    docs = load(spark, sf_dir, "documents")
+    assert starved(docs)
+    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
+    assert not starved(docs)
+    assert spread(docs, "doc_id") is docs
+    j3 = formatted_plan(all_queries()["j3_star_join"].fn(spark, sf_dir))
+    assert "ShuffledHashJoin" in j3
 
 
 def test_spread_runs_no_job(spark, sf_dir):
